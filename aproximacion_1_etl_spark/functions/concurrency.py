@@ -9,12 +9,9 @@ pool so each job's straggler tail is back-filled by its siblings'
 tasks — the device the RTBF audit introduced in r13, factored out for
 the report/retrain keys that run 2-4 independent evaluation chains.
 
-Invariants the callers must keep (ADVICE r13 #3):
-
-- every memoized store/codebook getter a thunk touches must have been
-  materialized BEFORE the pool (the shipped callers pass artifacts in
-  as arguments, which forces exactly that);
-- thunks submit Spark jobs but never mutate shared session state.
+Thunks submit Spark jobs but never mutate shared session state. A
+memoized artifact a thunk touches is safe to request from several
+threads at once: ``queries.common.artifact`` builds each key once.
 
 On a thunk failure the remaining futures are cancelled where still
 queued, every already-running sibling is awaited, and the FIRST

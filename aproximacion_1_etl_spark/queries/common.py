@@ -4,8 +4,11 @@ monolithic queries.py — every segment below is verbatim)."""
 
 from __future__ import annotations
 
+import functools
+import inspect
 import os
 import tempfile
+import threading
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -73,24 +76,85 @@ def _reclaimed_dist(df: DataFrame, *paths: str) -> DataFrame:
             shutil.rmtree(p, ignore_errors=True)
 
 
-def _artifact_key(sf_dir: str, table: str) -> tuple:
-    """Cache key for memoized model artifacts: (sf_dir, source-parquet
-    mtime) so a testdata regeneration inside one long-lived process
-    retrains instead of serving a stale model. A missing file keys on
-    -1 and lets the downstream read raise the real error."""
-    path = os.path.join(sf_dir, f"{table}.parquet")
+def _parquet_mtime(path: str) -> float:
+    """Newest mtime of a parquet table (a file, or a directory of part
+    files); -1 when unreadable, so the downstream read raises the real
+    error."""
     try:
         if os.path.isdir(path):
-            mt = max(
+            return max(
                 (os.path.getmtime(os.path.join(path, f))
                  for f in os.listdir(path)),
                 default=os.path.getmtime(path),
             )
-        else:
-            mt = os.path.getmtime(path)
+        return os.path.getmtime(path)
     except OSError:
-        mt = -1.0
-    return (sf_dir, mt)
+        return -1.0
+
+
+def _corpus_stamp(spark: SparkSession, sf_dir: str) -> tuple:
+    """The validity stamp of every memoized artifact: the Spark
+    application id (checkpointed relations die with their session) and
+    the (table, mtime) of every ``*.parquet`` under ``sf_dir`` (a
+    regenerated corpus rebuilds, whichever tables a builder reads)."""
+    try:
+        tables = sorted(
+            f for f in os.listdir(sf_dir) if f.endswith(".parquet")
+        )
+    except OSError:
+        tables = []
+    return (
+        spark.sparkContext.applicationId,
+        tuple(
+            (t, _parquet_mtime(os.path.join(sf_dir, t))) for t in tables
+        ),
+    )
+
+
+_ARTIFACTS: dict[tuple, tuple[tuple, object]] = {}
+_ARTIFACT_LOCKS: dict[tuple, threading.Lock] = {}
+_ARTIFACTS_GUARD = threading.Lock()
+
+
+def artifact(fn):
+    """Memoize a ``(spark, sf_dir, ...)`` builder of a corpus artifact —
+    a trained model (codebook, merges, weights) or a simulated
+    persisted store (eagerly checkpointed relations that production
+    keeps on disk). Builders are deterministic, so the memo never
+    changes a result; it only lets every consumer in a session share
+    one build, and lets the bench time that build as its own line item.
+
+    - key: the builder, ``sf_dir`` and the remaining bound arguments;
+    - validity: ``_corpus_stamp`` — a new session or a rewritten
+      parquet table rebuilds, and the rebuilt entry replaces the old
+      one (one entry per key, so superseded blocks are not pinned);
+    - single-flight: concurrent callers of one key (``overlap``
+      threads) wait on that key's lock and share one build; builds of
+      other keys — including ones nested inside this build — proceed;
+    - a build that raises caches nothing and re-raises."""
+    sig = inspect.signature(fn)
+
+    @functools.wraps(fn)
+    def memoized(spark, sf_dir, *args, **kwargs):
+        bound = sig.bind(spark, sf_dir, *args, **kwargs)
+        bound.apply_defaults()
+        key = (fn, sf_dir, *list(bound.arguments.values())[2:])
+        stamp = _corpus_stamp(spark, sf_dir)
+        with _ARTIFACTS_GUARD:
+            lock = _ARTIFACT_LOCKS.setdefault(key, threading.Lock())
+        with lock:
+            with _ARTIFACTS_GUARD:
+                hit = _ARTIFACTS.get(key)
+                if hit is not None and hit[0] == stamp:
+                    return hit[1]
+                # stale: unpin it before the rebuild
+                _ARTIFACTS.pop(key, None)
+            value = fn(spark, sf_dir, *args, **kwargs)
+            with _ARTIFACTS_GUARD:
+                _ARTIFACTS[key] = (stamp, value)
+            return value
+
+    return memoized
 
 
 def _hist_bucket(value, lo: float, width: float, n_b: int):
@@ -207,32 +271,36 @@ def _histogram_quantile_report(
     )
 
 
-_IVF_CODEBOOK_CACHE: dict[tuple, dict[int, list[float]]] = {}
+def _ivf_codebook_over(emb: DataFrame) -> dict[int, list[float]]:
+    """The IVF codebook training pass over one embedding slice — ONE
+    body for every IVF codebook generation."""
+    from aproximacion_1_etl_spark.text.vector import (
+        derive_n_centroids,
+        train_ivf_centroids,
+    )
+
+    return train_ivf_centroids(
+        emb, n_centroids=derive_n_centroids(emb.count()), iterations=3
+    )
 
 
+def _pq_books_over(emb: DataFrame) -> dict:
+    """The PQ subspace codebook training pass over one embedding slice
+    — ONE body for every PQ book generation."""
+    from aproximacion_1_etl_spark.text.vector import train_pq_codebooks
+
+    return train_pq_codebooks(emb, m=8, n_centroids=16, iterations=3)
+
+
+@artifact
 def _trained_codebook(
     spark: SparkSession, sf_dir: str
 ) -> dict[int, list[float]]:
-    """Train-once-per-corpus IVF codebook (memoized on (sf_dir, parquet
-    mtime) so a regenerated corpus retrains): the codebook is a model
+    """Train-once-per-corpus IVF codebook: the codebook is a model
     artifact — in production it is trained once and shipped to every
     consumer, so the ann and semantic-dedup catalog keys sharing one
-    training run is the honest cost model, not a bench trick.
-    Deterministic, so the cache never changes a result."""
-    key = _artifact_key(sf_dir, "embeddings")
-    cb = _IVF_CODEBOOK_CACHE.get(key)
-    if cb is None:
-        from aproximacion_1_etl_spark.text.vector import (
-            derive_n_centroids,
-            train_ivf_centroids,
-        )
-
-        emb = load_table(spark, sf_dir, "embeddings")
-        cb = train_ivf_centroids(
-            emb, n_centroids=derive_n_centroids(emb.count()), iterations=3
-        )
-        _IVF_CODEBOOK_CACHE[key] = cb
-    return cb
+    training run is the honest cost model, not a bench trick."""
+    return _ivf_codebook_over(load_table(spark, sf_dir, "embeddings"))
 
 
 def _orders_cdc(
@@ -263,84 +331,43 @@ def _orders_cdc(
     return inserts, updates, deletes
 
 
-_PQ_BOOKS_CACHE: dict[tuple, dict] = {}
-
-
+@artifact
 def _trained_pq_books(spark: SparkSession, sf_dir: str) -> dict:
-    """Train-once-per-corpus PQ codebooks (memoized on (sf_dir, parquet
-    mtime) — same model-artifact reasoning as _trained_codebook)."""
-    key = _artifact_key(sf_dir, "embeddings")
-    books = _PQ_BOOKS_CACHE.get(key)
-    if books is None:
-        from aproximacion_1_etl_spark.text.vector import train_pq_codebooks
-
-        emb = load_table(spark, sf_dir, "embeddings")
-        books = train_pq_codebooks(emb, m=8, n_centroids=16, iterations=3)
-        _PQ_BOOKS_CACHE[key] = books
-    return books
+    """Train-once-per-corpus PQ codebooks — same model-artifact
+    reasoning as _trained_codebook."""
+    return _pq_books_over(load_table(spark, sf_dir, "embeddings"))
 
 
-_APPEND_CODEBOOK_CACHE: dict[tuple, dict[int, list[float]]] = {}
-
-
+@artifact
 def _trained_append_codebook(
     spark: SparkSession, sf_dir: str
 ) -> dict[int, list[float]]:
     """Codebook trained on the HISTORICAL slice only (vec_id % 4 != 0)
     — 'yesterday's index', the artifact q_ivf_index_append appends
-    today's batch into. Memoized on (sf_dir, parquet mtime) like every
-    model artifact."""
-    from aproximacion_1_etl_spark.text.vector import (
-        derive_n_centroids,
-        train_ivf_centroids,
-    )
-
-    key = _artifact_key(sf_dir, "embeddings")
-    cb = _APPEND_CODEBOOK_CACHE.get(key)
-    if cb is None:
-        old = load_table(spark, sf_dir, "embeddings").filter(
+    today's batch into."""
+    return _ivf_codebook_over(
+        load_table(spark, sf_dir, "embeddings").filter(
             F.col("vec_id") % 4 != 0
         )
-        cb = train_ivf_centroids(
-            old, n_centroids=derive_n_centroids(old.count()), iterations=3
-        )
-        _APPEND_CODEBOOK_CACHE[key] = cb
-    return cb
+    )
 
 
-_HALF_CODEBOOK_CACHE: dict[tuple, dict[int, list[float]]] = {}
-
-
+@artifact
 def _trained_half_codebook(
     spark: SparkSession, sf_dir: str
 ) -> dict[int, list[float]]:
     """Codebook trained on the retrain-plan key's STORE slice
     (vec_id % 2 == 0) — the aging index whose drift
     q_ivf_retrain_plan measures as successive waves append against
-    it. Memoized on (sf_dir, parquet mtime) like every model
-    artifact; benched as its own ``half_codebook_train_sec`` line
-    item."""
-    from aproximacion_1_etl_spark.text.vector import (
-        derive_n_centroids,
-        train_ivf_centroids,
-    )
-
-    key = _artifact_key(sf_dir, "embeddings")
-    cb = _HALF_CODEBOOK_CACHE.get(key)
-    if cb is None:
-        old = load_table(spark, sf_dir, "embeddings").filter(
+    it. Benched as its own ``half_codebook_train_sec`` line item."""
+    return _ivf_codebook_over(
+        load_table(spark, sf_dir, "embeddings").filter(
             F.col("vec_id") % 2 == 0
         )
-        cb = train_ivf_centroids(
-            old, n_centroids=derive_n_centroids(old.count()), iterations=3
-        )
-        _HALF_CODEBOOK_CACHE[key] = cb
-    return cb
+    )
 
 
-_RETRAIN_CODEBOOK_CACHE: dict[tuple, dict[int, list[float]]] = {}
-
-
+@artifact
 def _trained_retrain_codebook(
     spark: SparkSession, sf_dir: str
 ) -> dict[int, list[float]]:
@@ -349,50 +376,27 @@ def _trained_retrain_codebook(
     the corpus whose drift flipped q_ivf_retrain_plan's verdict):
     what executing the retrain decision produces.
     q_ivf_retrain_execute measures its recall/cost against the aging
-    half-corpus codebook. Memoized + benched as
-    ``retrain_codebook_train_sec`` like every model artifact."""
-    from aproximacion_1_etl_spark.text.vector import (
-        derive_n_centroids,
-        train_ivf_centroids,
-    )
-
-    key = _artifact_key(sf_dir, "embeddings")
-    cb = _RETRAIN_CODEBOOK_CACHE.get(key)
-    if cb is None:
-        emb = load_table(spark, sf_dir, "embeddings")
-        corpus = emb.filter(
+    half-corpus codebook. Benched as ``retrain_codebook_train_sec``."""
+    return _ivf_codebook_over(
+        load_table(spark, sf_dir, "embeddings").filter(
             (F.col("vec_id") % 2 == 0)
             | (F.col("vec_id") % 8).isin(1, 3, 5)
         )
-        cb = train_ivf_centroids(
-            corpus,
-            n_centroids=derive_n_centroids(corpus.count()),
-            iterations=3,
-        )
-        _RETRAIN_CODEBOOK_CACHE[key] = cb
-    return cb
+    )
 
 
-_HALF_PQ_BOOKS_CACHE: dict[tuple, dict] = {}
-
-
+@artifact
 def _trained_half_pq_books(spark: SparkSession, sf_dir: str) -> dict:
     """AGING PQ subspace codebooks — trained on the retrain family's
     STORE slice (vec_id % 2 == 0), seeded from that slice's own first
     ids: 'yesterday's codes', whose ADC ranking q_pq_retrain_execute
-    measures against a fresh retrain as the corpus grows. Memoized +
-    benched as ``half_pq_books_train_sec``."""
-    from aproximacion_1_etl_spark.text.vector import train_pq_codebooks
-
-    key = _artifact_key(sf_dir, "embeddings")
-    books = _HALF_PQ_BOOKS_CACHE.get(key)
-    if books is None:
-        old = load_table(spark, sf_dir, "embeddings").filter(
+    measures against a fresh retrain as the corpus grows. Benched as
+    ``half_pq_books_train_sec``."""
+    return _pq_books_over(
+        load_table(spark, sf_dir, "embeddings").filter(
             F.col("vec_id") % 2 == 0
         )
-        books = train_pq_codebooks(old, m=8, n_centroids=16, iterations=3)
-        _HALF_PQ_BOOKS_CACHE[key] = books
-    return books
+    )
 
 
 def _pq_drift_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -418,51 +422,31 @@ def _pq_drift_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return store.filter(F.col("vec_id") % 2 == 0).unionByName(waves)
 
 
-_RETRAIN_PQ_BOOKS_CACHE: dict[tuple, dict] = {}
-
-
+@artifact
 def _trained_retrain_pq_books(spark: SparkSession, sf_dir: str) -> dict:
     """The RETRAINED PQ codebooks over the DRIFTED appended corpus
     (_pq_drift_corpus — the store plus negated-region waves) — what
-    executing the retrain decision produces on the PQ side. Memoized
-    + benched as ``retrain_pq_books_train_sec``."""
-    from aproximacion_1_etl_spark.text.vector import train_pq_codebooks
-
-    key = _artifact_key(sf_dir, "embeddings")
-    books = _RETRAIN_PQ_BOOKS_CACHE.get(key)
-    if books is None:
-        books = train_pq_codebooks(
-            _pq_drift_corpus(spark, sf_dir), m=8, n_centroids=16,
-            iterations=3,
-        )
-        _RETRAIN_PQ_BOOKS_CACHE[key] = books
-    return books
+    executing the retrain decision produces on the PQ side. Benched as
+    ``retrain_pq_books_train_sec``."""
+    return _pq_books_over(_pq_drift_corpus(spark, sf_dir))
 
 
-_BPE_MERGES_CACHE: dict[tuple, list[tuple[str, str]]] = {}
-
-
+@artifact
 def _trained_bpe_merges(
     spark: SparkSession, sf_dir: str
 ) -> list[tuple[str, str]]:
-    """Train-once-per-corpus BPE merge table (memoized on (sf_dir,
-    parquet mtime) — the tokenizer is a model artifact trained once and
-    shipped to every consumer, same cost model as the IVF codebook).
-    Exposed as a named builder so bench warmup can pre-build it with
-    its own line item instead of charging training to the first
-    encode-pass sample."""
+    """Train-once-per-corpus BPE merge table — the tokenizer is a model
+    artifact trained once and shipped to every consumer, same cost
+    model as the IVF codebook. Exposed as a named builder so bench
+    warmup can pre-build it with its own line item instead of charging
+    training to the first encode-pass sample."""
     from aproximacion_1_etl_spark.text.analysis import bpe_train_merges
 
-    key = _artifact_key(sf_dir, "documents")
-    merges = _BPE_MERGES_CACHE.get(key)
-    if merges is None:
-        docs = load_table(spark, sf_dir, "documents")
-        merges = [
-            (r["p1"], r["p2"])
-            for r in bpe_train_merges(docs, n_merges=8).collect()
-        ]
-        _BPE_MERGES_CACHE[key] = merges
-    return merges
+    docs = load_table(spark, sf_dir, "documents")
+    return [
+        (r["p1"], r["p2"])
+        for r in bpe_train_merges(docs, n_merges=8).collect()
+    ]
 
 
 BLOCKLIST_DOMAINS = ["src3.example.com", "src7.example.com", "bad.example.org"]
@@ -732,9 +716,6 @@ def _run_streaming_max_concurrency(
         shutil.rmtree(ckpt, ignore_errors=True)
 
 
-_LOGREG_CACHE: dict[tuple, list[float]] = {}
-
-
 def _logreg_feats(spark: SparkSession, sf_dir: str):
     from aproximacion_1_etl_spark.text.vector import _as_double
 
@@ -748,26 +729,22 @@ def _logreg_feats(spark: SparkSession, sf_dir: str):
     )
 
 
+@artifact
 def _trained_logreg_weights(spark: SparkSession, sf_dir: str) -> list[float]:
-    """Train-once-per-corpus logreg weight vector (memoized on (sf_dir,
-    parquet mtime)). Named builder so bench warmup can pre-build it
-    with its own line item (same cost model as the IVF codebook;
-    training cost is carried by the logreg_label_model key itself)."""
+    """Train-once-per-corpus logreg weight vector. Named builder so
+    bench warmup can pre-build it with its own line item (same cost
+    model as the IVF codebook; training cost is carried by the
+    logreg_label_model key itself)."""
     from aproximacion_1_etl_spark.operators.ml import (
         logistic_regression_gd,
     )
 
-    key = _artifact_key(sf_dir, "embeddings")
-    w = _LOGREG_CACHE.get(key)
-    if w is None:
-        w = logistic_regression_gd(
-            _logreg_feats(spark, sf_dir).select("y", "x1", "x2", "x3"),
-            ["x1", "x2", "x3"],
-            iterations=12,
-            lr=2.0,
-        )
-        _LOGREG_CACHE[key] = w
-    return w
+    return logistic_regression_gd(
+        _logreg_feats(spark, sf_dir).select("y", "x1", "x2", "x3"),
+        ["x1", "x2", "x3"],
+        iterations=12,
+        lr=2.0,
+    )
 
 
 def _logreg_scored(spark: SparkSession, sf_dir: str):
@@ -1418,27 +1395,22 @@ __all__ = [
     "_ts_str",
     "_reclaimed",
     "_reclaimed_dist",
-    "_artifact_key",
+    "artifact",
     "_hist_bucket",
     "_cum_hist",
     "_histogram_quantile_report",
-    "_IVF_CODEBOOK_CACHE",
     "_trained_codebook",
     "_orders_cdc",
-    "_PQ_BOOKS_CACHE",
     "_trained_pq_books",
     "_trained_half_pq_books",
     "_pq_drift_corpus",
     "_trained_retrain_pq_books",
-    "_APPEND_CODEBOOK_CACHE",
     "_trained_append_codebook",
     "_trained_half_codebook",
     "_trained_retrain_codebook",
-    "_BPE_MERGES_CACHE",
     "_trained_bpe_merges",
     "BLOCKLIST_DOMAINS",
     "_run_streaming_max_concurrency",
-    "_LOGREG_CACHE",
     "_logreg_feats",
     "_trained_logreg_weights",
     "_logreg_scored",

@@ -627,9 +627,7 @@ def _capped_order_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return li.join(small, "l_orderkey", "left_semi").join(o, "l_orderkey")
 
 
-_CAPPED_BASKETS_CACHE: dict[tuple, DataFrame] = {}
-
-
+@artifact
 def _capped_order_baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-order SORTED distinct part baskets with the max_basket=64
     cap and the order date, in ONE fact shuffle: collect_set dedupes
@@ -642,7 +640,7 @@ def _capped_order_baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges per slice from flat rows — 4 fact-sized shuffles and 11.3 s
     at sf0.1; this form measures 3.5 s for both slices together.)
 
-    MEMOIZED per (facts, session) since r14: the graph-store builders
+    Memoized since r14: the graph-store builders
     (_persisted_graph_store, _full_graph_store) and the incremental
     key's batch slice each derived this same deterministic relation
     with its own fact shuffle — three collect_set passes over
@@ -650,14 +648,6 @@ def _capped_order_baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
     share the edge/signature relations inside a segment). Every
     consumer takes a narrow filter of the one checkpointed relation;
     first touch in a bench segment is a store-builder line item."""
-    key = (
-        _artifact_key(sf_dir, "orders"),
-        _artifact_key(sf_dir, "lineitem"),
-        spark.sparkContext.applicationId,
-    )
-    cached = _CAPPED_BASKETS_CACHE.get(key)
-    if cached is not None:
-        return cached
     dp = spark.sparkContext.defaultParallelism
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey"
@@ -665,7 +655,7 @@ def _capped_order_baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("l_orderkey"), "o_orderdate"
     )
-    cached = (
+    return (
         li.repartition(dp, F.col("l_orderkey"))
         .groupBy("l_orderkey")
         .agg(F.array_sort(F.collect_set("l_partkey")).alias("ps"))
@@ -673,8 +663,6 @@ def _capped_order_baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(o, "l_orderkey")
         .localCheckpoint(eager=True)
     )
-    _CAPPED_BASKETS_CACHE[key] = cached
-    return cached
 
 
 def _basket_edges(baskets: DataFrame) -> DataFrame:
@@ -793,34 +781,15 @@ def q_incremental_graph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _graph_stats_top20(folded)
 
 
-_FULL_GRAPH_STORE_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
-
-
 def _full_graph_store(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
     """The SIMULATED persisted graph store over the FULL capped
     co-order graph — the state the deletion key shrinks (the
-    incremental twin's _persisted_graph_store covers the pre-cut
-    history a fold starts from). Memoized + eagerly checkpointed;
-    benched as ``full_graph_store_build_sec``."""
-    key = (
-        _artifact_key(sf_dir, "orders"),
-        spark.sparkContext.applicationId,
-    )
-    cached = _FULL_GRAPH_STORE_CACHE.get(key)
-    if cached is None:
-        from aproximacion_1_etl_spark.operators.graph import (
-            bulk_graph_stats,
-        )
-
-        edges = _basket_edges(
-            _capped_order_baskets(spark, sf_dir)
-        ).localCheckpoint(eager=True)
-        stats = bulk_graph_stats(edges).localCheckpoint(eager=True)
-        cached = (edges, stats)
-        _FULL_GRAPH_STORE_CACHE[key] = cached
-    return cached
+    incremental twin covers the pre-cut history a fold starts from):
+    _persisted_graph_store with no cut. Benched as
+    ``full_graph_store_build_sec``."""
+    return _persisted_graph_store(spark, sf_dir, cut=None)
 
 
 def q_graph_stats_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -853,45 +822,25 @@ def q_graph_stats_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_GRAPH_STORE_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
-
-
+@artifact
 def _persisted_graph_store(
-    spark: SparkSession, sf_dir: str, cut: str = "2001-01-01"
+    spark: SparkSession, sf_dir: str, cut: str | None = "2001-01-01"
 ) -> tuple[DataFrame, DataFrame]:
-    """The SIMULATED persisted graph store — (historical edge
-    relation, per-node stats over it) as the shared bulk build would
-    have left them on disk. In production both are parquet reads (the
-    edge store bucketed by node); in this repo they are rebuilt from
-    the facts, memoized per (corpus, cut) like the codebook artifacts
-    (_trained_codebook) and eagerly checkpointed, so the bench can
-    time the store build as its own line item
-    (``graph_store_build_sec``) instead of charging ~3x the fold's
-    real per-batch cost to the maintenance key (VERDICT r9 #4).
-    Deterministic, so the cache never changes a result."""
-    # keyed on the application id too: unlike the driver-held codebook
-    # dicts, these are checkpointed DataFrames owned by ONE SparkSession
-    # — a restarted session must rebuild, not touch a dead RDD
-    key = (
-        _artifact_key(sf_dir, "orders"),
-        cut,
-        spark.sparkContext.applicationId,
-    )
-    cached = _GRAPH_STORE_CACHE.get(key)
-    if cached is None:
-        from aproximacion_1_etl_spark.operators.graph import (
-            bulk_graph_stats,
-        )
+    """The SIMULATED persisted graph store — (edge relation of the
+    orders dated before ``cut``, or of all orders when ``cut`` is None;
+    per-node stats over it) as the shared bulk build would have left
+    them on disk. In production both are parquet reads (the edge store
+    bucketed by node); the bench times the store build as its own line
+    item (``graph_store_build_sec``) instead of charging ~3x the
+    fold's real per-batch cost to the maintenance key (VERDICT r9
+    #4)."""
+    from aproximacion_1_etl_spark.operators.graph import bulk_graph_stats
 
-        hist_edges = _basket_edges(
-            _capped_order_baskets(spark, sf_dir).filter(
-                F.col("o_orderdate") < cut
-            )
-        ).localCheckpoint(eager=True)
-        stats = bulk_graph_stats(hist_edges).localCheckpoint(eager=True)
-        cached = (hist_edges, stats)
-        _GRAPH_STORE_CACHE[key] = cached
-    return cached
+    baskets = _capped_order_baskets(spark, sf_dir)
+    if cut is not None:
+        baskets = baskets.filter(F.col("o_orderdate") < cut)
+    edges = _basket_edges(baskets).localCheckpoint(eager=True)
+    return edges, bulk_graph_stats(edges).localCheckpoint(eager=True)
 
 
 __all__ = [

@@ -2704,7 +2704,7 @@ def q_streaming_chunk_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     import time as _time
 
     from aproximacion_1_etl_spark.queries.text import (
-        _chunk_texts,
+        _chunk_text_docs,
         _pooled_chunk_vectors,
     )
     from aproximacion_1_etl_spark.text.analysis import (
@@ -2746,9 +2746,7 @@ def q_streaming_chunk_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         pooled.write.mode("overwrite").parquet(
             os.path.join(base, f"vec_b{batch_id}")
         )
-        bct = _chunk_texts(batch, budget).select(
-            F.col("ckey").alias("doc_id"), "text"
-        )
+        bct = _chunk_text_docs(batch, budget)
         if committed:
             # doc-level guard above already enforced disjointness and
             # chunk keys derive injectively from doc ids — skip the

@@ -477,9 +477,7 @@ def q_ivf_retrain_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-_RETRAIN_EXACT_CACHE: dict[tuple, DataFrame] = {}
-
-
+@artifact
 def _retrain_exact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The brute-force cosine top-10 ground truth over the APPENDED
     retrain corpus (store slice ∪ the cumulative %8∈{1,3,5} backlog)
@@ -488,28 +486,18 @@ def _retrain_exact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_ivf_retrain_execute's codebook evaluations measure against the
     ONE materialization instead of each re-running the |corpus|·|Q|
     brute pass (VERDICT r13 task 3: share the ground truths between
-    the plan/execute pair within a session). Memoized per (corpus,
-    session) + eagerly checkpointed like the codebook artifacts;
-    deterministic, so the cache never changes a result."""
+    the plan/execute pair within a session)."""
     from aproximacion_1_etl_spark.text.vector import ann_topk_bruteforce
 
-    key = (
-        _artifact_key(sf_dir, "embeddings"),
-        spark.sparkContext.applicationId,
+    emb = load_table(spark, sf_dir, "embeddings")
+    corpus = emb.filter(
+        (F.col("vec_id") % 2 == 0) | (F.col("vec_id") % 8).isin(1, 3, 5)
     )
-    cached = _RETRAIN_EXACT_CACHE.get(key)
-    if cached is None:
-        emb = load_table(spark, sf_dir, "embeddings")
-        corpus = emb.filter(
-            (F.col("vec_id") % 2 == 0) | (F.col("vec_id") % 8).isin(1, 3, 5)
-        )
-        cached = (
-            ann_topk_bruteforce(corpus, query_ids=[0, 2, 4], k=10)
-            .select("query_id", "vec_id")
-            .localCheckpoint(eager=True)
-        )
-        _RETRAIN_EXACT_CACHE[key] = cached
-    return cached
+    return (
+        ann_topk_bruteforce(corpus, query_ids=[0, 2, 4], k=10)
+        .select("query_id", "vec_id")
+        .localCheckpoint(eager=True)
+    )
 
 
 def q_ivf_retrain_execute(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -90,16 +90,6 @@ def get_spark(
     return builder.getOrCreate()
 
 
-def tune_for_scale(spark: SparkSession, target_partitions: int) -> None:
-    """Adjust shuffle parallelism for a known data scale.
-
-    At 100 TB with ~1000 executors you want shuffle partitions sized so
-    each holds ~128-256 MB; callers that know their input volume call
-    this before heavy stages. AQE will still coalesce small partitions.
-    """
-    spark.conf.set("spark.sql.shuffle.partitions", str(target_partitions))
-
-
 def cluster_conf(
     total_cores: int,
     input_tb: float,

@@ -2233,37 +2233,52 @@ def ivf_nprobe_plan(
         .localCheckpoint(eager=True),
     )
     tot = pop.agg(F.sum("pop").cast("bigint").alias("n_total"))
-    # scan is a |Q|·pmax ⋈ |cells| join of two checkpointed relations;
-    # re-deriving it per ladder step is cheaper than a 4th checkpoint
-    scan = probes.join(pop, "cell")
-    outs = []
-    for p in ladder:
-        hits = capture.agg(
+    # ONE aggregate over capture and ONE over the |Q|·pmax ⋈ |cells|
+    # scan join, a column per ladder step, stacked into ladder rows by
+    # explode: a per-step aggregate would plan both joins once per step
+    hits = capture.agg(
+        *[
             F.sum(
                 F.when(F.col("captured_rank") <= p, 1).otherwise(0)
-            ).cast("bigint").alias("hits")
+            ).cast("bigint").alias(f"_h{i}")
+            for i, p in enumerate(ladder)
+        ]
+    )
+    scanned = probes.join(pop, "cell").agg(
+        *[
+            F.sum(
+                F.when(F.col("probe_rank") <= p, F.col("pop"))
+            ).cast("bigint").alias(f"_s{i}")
+            for i, p in enumerate(ladder)
+        ]
+    )
+    steps = F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(p).cast("int").alias("nprobe"),
+                    F.col(f"_h{i}").alias("hits"),
+                    F.col(f"_s{i}").alias("scanned_rows"),
+                )
+                for i, p in enumerate(ladder)
+            ]
         )
-        scanned = scan.filter(F.col("probe_rank") <= p).agg(
-            F.sum("pop").cast("bigint").alias("scanned_rows")
+    ).alias("st")
+    return (
+        hits.crossJoin(scanned)
+        .crossJoin(F.broadcast(tot))
+        .select(steps, "n_total")
+        .select(
+            F.col("st.nprobe").alias("nprobe"),
+            _fround(
+                F.col("st.hits") * F.lit(1.0) / F.lit(nq * k), 6
+            ).alias("recall_at_k"),
+            _fround(
+                F.col("st.scanned_rows")
+                * F.lit(1.0)
+                / (F.lit(nq) * F.col("n_total")),
+                6,
+            ).alias("scan_frac"),
+            F.col("st.scanned_rows").alias("scanned_rows"),
         )
-        outs.append(
-            hits.crossJoin(scanned)
-            .crossJoin(F.broadcast(tot))
-            .select(
-                F.lit(p).cast("int").alias("nprobe"),
-                _fround(
-                    F.col("hits") * F.lit(1.0) / F.lit(nq * k), 6
-                ).alias("recall_at_k"),
-                _fround(
-                    F.col("scanned_rows")
-                    * F.lit(1.0)
-                    / (F.lit(nq) * F.col("n_total")),
-                    6,
-                ).alias("scan_frac"),
-                "scanned_rows",
-            )
-        )
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out
+    )
